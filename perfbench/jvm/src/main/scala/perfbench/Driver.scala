@@ -9,12 +9,13 @@ import org.apache.spark.sql.SparkSession
 
 /** One benchmark process.
   *
-  * Set-up: pinned session with GraftExtensions → inputs registered →
-  * warm-up passes (whose outputs the correctness check reads). Then a
-  * closed loop of whole passes, one client, for `--seconds`; with
-  * `--trace 1` the window is split into an untraced half and a traced
-  * half, so the trace carries its own overhead figure. Raw samples and
-  * spans go to `<out>/raw.json`; `report.py` turns them into metrics.
+  * Set-up: pinned session with GraftExtensions → warm-up passes (whose
+  * outputs the correctness check reads). Then a closed loop of whole
+  * passes, one client, for `--seconds`; with `--trace 1` traced passes
+  * alternate with the untraced ones until each kind has run for
+  * `--seconds`, so the trace carries its own overhead figure. Raw
+  * samples and spans go to `<out>/raw.json`; `report.py` turns them
+  * into metrics.
   *
   * usage: perfbench.Driver --workload W --data DIR --out DIR --seconds S
   *        --trace 0|1 --seed N --cores C --launch-ms EPOCH_MS
@@ -25,6 +26,10 @@ object Driver {
     * third over the measured passes and five seeds spread by 35%; with
     * three they spread by 1-2% on a quiet 4-core host. */
   val WarmupPasses = 3
+
+  /** Passes a window runs at least, however long they take, so a median
+    * and a traced-to-untraced ratio never rest on one pass. */
+  val MinPasses = 2
 
   private final case class Args(workload: String, data: String, out: String,
       seconds: Double, trace: Boolean, seed: Long, cores: Int, launchMs: Long)
@@ -58,22 +63,14 @@ object Driver {
     }.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sessionMs = System.currentTimeMillis()
-    workload.tables.foreach { t =>
-      spark.read.parquet(s"${a.data}/$t.parquet").createOrReplaceTempView(t)
-    }
-    val registeredMs = System.currentTimeMillis()
 
     val runner = new Runner(spark, a.data, a.out)
     val warm = (1 to WarmupPasses).flatMap(i => ops.map(op => runner.run(op, s"warmup$i", Runner.Check, None, 0L)))
     val readyMs = System.currentTimeMillis()
 
-    val untracedSeconds = if (a.trace) a.seconds / 2 else a.seconds
-    val untraced = measure(runner, a, workload, untracedSeconds, None)
-    val traced = if (!a.trace) None else {
-      val tracer = new Tracer(spark.sparkContext)
-      val window = measure(runner, a, workload, a.seconds - untracedSeconds, Some(tracer))
-      Some(window ++ tracer.snapshot())
-    }
+    val tracer = if (a.trace) Some(new Tracer(spark.sparkContext)) else None
+    val (untraced, tracedWindow) = measure(runner, a, workload, tracer)
+    val traced = tracer.map(t => tracedWindow ++ t.snapshot())
 
     val rt = ManagementFactory.getRuntimeMXBean
     val raw = Map(
@@ -88,7 +85,7 @@ object Driver {
         "spark" -> spark.version),
       "load_avg_1m" -> ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage,
       "timeline_ms" -> Map("launch" -> a.launchMs, "main" -> mainMs,
-        "session" -> sessionMs, "registered" -> registeredMs, "ready" -> readyMs),
+        "session" -> sessionMs, "ready" -> readyMs),
       "oracle_sql" -> ops.flatMap(op => graft.SparkEntry.oracleSql.get(op.name).map(op.name -> _)).toMap,
       "warmup" -> warm,
       "untraced" -> untraced,
@@ -98,25 +95,42 @@ object Driver {
     mapper.writeValue(new File(s"${a.out}/raw.json"), raw)
   }
 
-  /** Closed loop for `seconds`, in whole passes, at least one. */
-  private def measure(runner: Runner, a: Args, workload: Workload, seconds: Double,
-                      tracer: Option[Tracer]): Map[String, Any] = {
+  /** The passes of one kind, traced or not. */
+  private final class Window(prefix: String) {
     val samples = ArrayBuffer.empty[Map[String, Any]]
     val passes = ArrayBuffer.empty[Double]
-    val t0 = System.nanoTime()
-    val deadline = t0 + (seconds * 1e9).toLong
+    def tag: String = s"$prefix${passes.size}"
+    def toMap: Map[String, Any] =
+      Map("samples" -> samples.toSeq, "passes_s" -> passes.toSeq, "elapsed_s" -> passes.sum)
+  }
+
+  /** Closed loop in whole passes until the untraced window, and with a
+    * tracer the traced one, has run for `--seconds`, at least
+    * `MinPasses` each. Traced and untraced passes alternate in ABBA order,
+    * so JIT warm-up and host drift fall on both alike and their difference
+    * is the tracing cost. */
+  private def measure(runner: Runner, a: Args, workload: Workload, tracer: Option[Tracer])
+      : (Map[String, Any], Map[String, Any]) = {
     val target = if (a.workload == "etl_load") Runner.Load else Runner.Noop
-    def body(runSpan: Long): Unit =
-      do {
-        val p0 = System.nanoTime()
-        workload.ops.foreach(op => samples += runner.run(op, s"p${passes.size}", target, tracer, runSpan))
-        passes += (System.nanoTime() - p0) / 1e9
-      } while (System.nanoTime() < deadline)
-    tracer match {
-      case Some(t) => t.span(0L, "run", "run")(body)
-      case None => body(0L)
+    val plain = new Window("p")
+    val traced = new Window("t")
+    def pass(w: Window, t: Option[Tracer]): Unit = {
+      val tag = w.tag
+      val p0 = System.nanoTime()
+      t match {
+        case Some(tr) => tr.pass(tag)(runSpan =>
+          workload.ops.foreach(op => w.samples += runner.run(op, tag, target, t, runSpan)))
+        case None => workload.ops.foreach(op => w.samples += runner.run(op, tag, target, None, 0L))
+      }
+      w.passes += (System.nanoTime() - p0) / 1e9
     }
-    Map("samples" -> samples.toSeq, "passes_s" -> passes.toSeq,
-      "elapsed_s" -> (System.nanoTime() - t0) / 1e9)
+    def open(w: Window) = w.passes.size < MinPasses || w.passes.sum < a.seconds
+    val kinds = (plain -> Option.empty[Tracer]) +: tracer.map(t => traced -> Some(t)).toSeq
+    var round = 0
+    while (kinds.exists { case (w, _) => open(w) }) {
+      (if (round % 2 == 0) kinds else kinds.reverse).foreach { case (w, t) => if (open(w)) pass(w, t) }
+      round += 1
+    }
+    (plain.toMap, traced.toMap)
   }
 }

@@ -6,13 +6,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 
-/** In-memory span recorder for one traced window.
+/** In-memory span recorder for the traced passes of one run.
   *
-  * The benchmark opens run, op and phase spans around its calls into the
-  * engine; a SparkListener adds job spans (parented by the phase whose
-  * job group they carry) and stage spans (parented by the job that
-  * submitted them), each stage with its task counters summed. Nothing
-  * is written until `snapshot` at the end of the run.
+  * The benchmark opens run (one per traced pass), op and phase spans
+  * around its calls into the engine; a SparkListener adds job spans
+  * (parented by the phase whose job group they carry) and stage spans
+  * (parented by the job that submitted them), each stage with its task
+  * counters summed. Jobs of untraced passes carry no traced group and
+  * are left out. Nothing is written until `snapshot` at the end of the
+  * run.
   */
 final class Tracer(sc: SparkContext) extends SparkListener {
   import Tracer.Span
@@ -24,7 +26,7 @@ final class Tracer(sc: SparkContext) extends SparkListener {
   private val jobSpans = mutable.HashMap.empty[Int, Span]
   private val stageSpan = mutable.HashMap.empty[Long, (Int, Int)]
   private val stageCounters = mutable.HashMap.empty[Int, mutable.Map[String, Double]]
-  private val gcAtStart = gcMillis()
+  private var gcMs = 0L
 
   // wall clock in ms with sub-ms resolution, on the same epoch as the
   // listener's event times
@@ -52,12 +54,19 @@ final class Tracer(sc: SparkContext) extends SparkListener {
     try body(s.id) finally s.end = nowMs
   }
 
+  /** One traced pass: a run span, with the GC time spent inside it. */
+  def pass[T](name: String)(body: Long => T): T = {
+    val gc0 = gcMillis()
+    try span(0L, name, "run")(body) finally gcMs += gcMillis() - gc0
+  }
+
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     val group = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-    val parent = group.flatMap(groupToSpan.get).getOrElse(0L)
-    val job = open(parent, s"job ${e.jobId}", "job", e.time.toDouble)
-    e.stageIds.foreach(sid => if (!stageToJob.contains(sid)) stageToJob(sid) = job.id)
-    jobSpans(e.jobId) = job
+    group.flatMap(groupToSpan.get).foreach { parent =>
+      val job = open(parent, s"job ${e.jobId}", "job", e.time.toDouble)
+      e.stageIds.foreach(sid => if (!stageToJob.contains(sid)) stageToJob(sid) = job.id)
+      jobSpans(e.jobId) = job
+    }
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
@@ -65,6 +74,10 @@ final class Tracer(sc: SparkContext) extends SparkListener {
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+    if (stageToJob.contains(e.stageId)) countTask(e)
+  }
+
+  private def countTask(e: SparkListenerTaskEnd): Unit = {
     val c = stageCounters.getOrElseUpdate(e.stageId, mutable.Map.empty[String, Double].withDefaultValue(0.0))
     c("tasks") += 1
     val m = e.taskMetrics
@@ -85,8 +98,8 @@ final class Tracer(sc: SparkContext) extends SparkListener {
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
     val i = e.stageInfo
-    for (start <- i.submissionTime; end <- i.completionTime) {
-      val s = open(stageToJob.getOrElse(i.stageId, 0L), s"stage ${i.stageId}", "stage", start.toDouble)
+    for (job <- stageToJob.get(i.stageId); start <- i.submissionTime; end <- i.completionTime) {
+      val s = open(job, s"stage ${i.stageId}", "stage", start.toDouble)
       s.end = end.toDouble
       stageSpan(s.id) = (i.stageId, i.numTasks)
     }
@@ -115,7 +128,7 @@ final class Tracer(sc: SparkContext) extends SparkListener {
             case None => base
           }
         },
-        "gc_ms" -> (gcMillis() - gcAtStart),
+        "gc_ms" -> gcMs,
         "heap_peak_mb" -> heapPeak / 1048576.0)
     }
   }

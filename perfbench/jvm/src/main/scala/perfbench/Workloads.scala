@@ -21,9 +21,8 @@ final case class Op(
     build: (SparkSession, String) => (DataFrame, Option[Observation]),
     partitionBy: Option[Seq[String]] = None)
 
-/** A workload: the tables it reads (registered at set-up) and the ops
-  * one pass runs, in order. */
-final case class Workload(tables: Seq[String], ops: Seq[Op])
+/** A workload: the ops one pass runs, in order. */
+final case class Workload(ops: Seq[Op])
 
 object Workloads {
   private def entry(name: String, module: String): Op =
@@ -32,7 +31,7 @@ object Workloads {
   val all: Map[String, Workload] = Map(
     // The reference Part2/Part3 load path: every step written through the
     // partitioned sink. Op names are the matching oracle entries.
-    "etl_load" -> Workload(Seq("events", "orders", "customer", "lineitem"), Seq(
+    "etl_load" -> Workload(Seq(
       Op("etl_clean_events", "etl",
         (s, d) => { val (df, obs) = EventsEtl.observedClean(s, d); (df, Some(obs)) },
         Some(Seq("service_key"))),
@@ -44,8 +43,10 @@ object Workloads {
         Some(Seq("direction"))),
       Op("q_trip_view", "analytics", (s, d) => (Analytics.tripView(s, d), None),
         Some(Seq("o_orderstatus"))))),
-    // Single-task-stage and eager-iterative rows, through the noop sink.
-    "heavy_batch" -> Workload(Seq("events", "supplier", "documents", "embeddings"), Seq(
+    // Single-task-stage and eager-iterative rows, plus the exact-duplicate
+    // path of the text module, through the noop sink.
+    "heavy_batch" -> Workload(Seq(
+      entry("dedup_exact", "text"),
       entry("dedup_editdist", "ops"),
       entry("ann_ivf", "vector"),
       entry("mm_frames", "multimodal"),

@@ -1,21 +1,21 @@
 """Output correctness: each op's Spark output against its
 `SparkEntry.oracleSql` entry evaluated in DuckDB over the same inputs.
 
-The verdict follows `tools/check.py`'s `cmp` rules: the same column set,
-the same row count, float columns only where the oracle has float
-columns (as pandas types them), and then every row equal, in any order,
-with NULL equal to NULL. The row comparison runs inside DuckDB as a
-multiset difference, so multi-million-row load outputs are checked
-without a pandas sort; floats are compared exactly, with -0.0 == 0.0.
+The verdict is the repository's own: `tools/check.py`'s `cmp`. This
+module only loads the two sides as pandas frames, the Spark output read
+like `tools/check.py` reads it, plus hive partition directories for the
+outputs written through the partitioned sink.
 """
 import glob
 import os
+import sys
 
 import duckdb
 import pandas as pd
-import pyarrow.parquet as pq
+import pyarrow.dataset as ds
 
-HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+import check  # noqa: E402
 
 
 def connect(data_dir):
@@ -29,64 +29,36 @@ def connect(data_dir):
     return con
 
 
-def _q(c):
-    return '"' + c.replace('"', '""') + '"'
-
-
-def _float_cols(dtypes):
-    return {c for c, t in dtypes.items() if pd.api.types.is_float_dtype(t)}
-
-
-def compare(con, out_dir, sql, partitioned):
-    """Returns ("OK" or the first rule the Spark output at `out_dir`
-    breaks, the output's row count)."""
+def load_spark(out_dir, partitioned):
+    """The Spark output at `out_dir` as one frame, or None if it wrote
+    nothing. Partition columns come from the `col=value` directory
+    names; `__HIVE_DEFAULT_PARTITION__` reads as null."""
     files = sorted(glob.glob(os.path.join(out_dir, "**", "*.parquet"), recursive=True))
     if not files:
-        return "MISSING spark output", 0
-    con.execute(f"CREATE OR REPLACE TEMP VIEW spark_raw AS SELECT * FROM read_parquet("
-                f"{files!r}, hive_partitioning = {str(partitioned).lower()})")
-    spark_cols = [r[0] for r in con.execute("DESCRIBE spark_raw").fetchall()]
-    part_cols = {p.split("=", 1)[0] for f in files
-                 for p in os.path.relpath(f, out_dir).split(os.sep)[:-1] if "=" in p}
-    con.execute("CREATE OR REPLACE TEMP VIEW spark AS SELECT " + ", ".join(
-        f"nullif({_q(c)}, '{HIVE_NULL}') AS {_q(c)}" if c in part_cols else _q(c) for c in spark_cols)
-        + " FROM spark_raw")
-    con.execute(f"CREATE OR REPLACE TEMP VIEW oracle AS {sql}")
-    oracle_dtypes = con.execute("SELECT * FROM oracle LIMIT 0").fetchdf().dtypes
-    if sorted(spark_cols) != sorted(oracle_dtypes.index):
-        return f"SCHEMA cols spark={sorted(spark_cols)} oracle={sorted(oracle_dtypes.index)}", 0
-    n_spark = con.execute("SELECT count(*) FROM spark").fetchone()[0]
-    n_oracle = con.execute("SELECT count(*) FROM oracle").fetchone()[0]
-    if n_spark != n_oracle:
-        return f"ROWS spark={n_spark} oracle={n_oracle}", n_spark
-    spark_dtypes = pq.read_schema(files[0]).empty_table().to_pandas().dtypes
-    spark_floats = _float_cols(spark_dtypes)
-    oracle_floats = _float_cols(oracle_dtypes)
-    for c in sorted(spark_cols):
-        # partition columns come back from the directory names, not the file
-        if c not in part_cols and (c in spark_floats) != (c in oracle_floats):
-            return f"DTYPE col={c} spark={spark_dtypes[c]} oracle={oracle_dtypes[c]}", n_spark
-    cols = ", ".join(f"{_q(c)} + 0.0 AS {_q(c)}" if c in oracle_floats else _q(c) for c in sorted(spark_cols))
-    for a, b in [("spark", "oracle"), ("oracle", "spark")]:
-        row = con.execute(f"SELECT * FROM (SELECT {cols} FROM {a} EXCEPT ALL SELECT {cols} FROM {b}) "
-                          "LIMIT 1").fetchone()
-        if row is not None:
-            return f"VALUE row only in {a}: {row!r}"[:300], n_spark
-    return "OK", n_spark
+        return None
+    if partitioned:
+        return ds.dataset(files, format="parquet", partitioning="hive",
+                          partition_base_dir=out_dir).to_table().to_pandas()
+    return pd.concat([pd.read_parquet(f) for f in files])
 
 
-def check(data_dir, oracle_sql, outputs):
+def check_outputs(data_dir, oracle_sql, outputs):
     """`outputs`: op name -> (output dir, written through the partitioned
     sink). Returns op name -> (verdict, output rows); an op without an
     oracle entry or whose oracle fails to run is a failure."""
     con = connect(data_dir)
     verdicts = {}
     for name, (out_dir, partitioned) in sorted(outputs.items()):
+        spark_df = load_spark(out_dir, partitioned)
         if name not in oracle_sql:
             verdicts[name] = ("NO-ORACLE", 0)
-            continue
-        try:
-            verdicts[name] = compare(con, out_dir, oracle_sql[name], partitioned)
-        except duckdb.Error as e:
-            verdicts[name] = (f"ORACLE-ERROR {str(e).splitlines()[0]}", 0)
+        elif spark_df is None:
+            verdicts[name] = ("MISSING spark output", 0)
+        else:
+            try:
+                oracle_df = con.execute(oracle_sql[name]).fetchdf()
+            except duckdb.Error as e:
+                verdicts[name] = (f"ORACLE-ERROR {str(e).splitlines()[0]}", len(spark_df))
+                continue
+            verdicts[name] = (check.cmp(name, spark_df, oracle_df), len(spark_df))
     return verdicts

@@ -10,7 +10,7 @@ MODULES = ["etl", "analytics", "text", "vector", "multimodal", "ops"]
 WORKLOAD_OPS = {
     "etl_load": ["etl_clean_events", "etl_quarantine", "etl_derive_speed",
                  "etl_dedup_keyfirst", "q_trip_view"],
-    "heavy_batch": ["dedup_editdist", "ann_ivf", "mm_frames", "mm_scene_change", "q_spatial_join"],
+    "heavy_batch": ["dedup_exact", "dedup_editdist", "ann_ivf", "mm_frames", "mm_scene_change", "q_spatial_join"],
 }
 SELF_LAYERS = ["run", "op", "construct", "plan", "execute", "write", "job", "stage"]
 
@@ -36,7 +36,7 @@ PER_LAYER = (
        ("shuffle.write_bytes", "B"), ("shuffle.read_bytes", "B"), ("shuffle.spill_bytes", "B"),
        ("shuffle.fetch_wait_s", "s"),
        ("jvm.gc_s", "s"), ("jvm.heap_peak_mb", "MB"),
-       ("trace.overhead_share", "ratio")]
+       ("trace.overhead_share", "ratio"), ("trace.passes", "count")]
     + [(f"self.{layer}_s", "s") for layer in SELF_LAYERS]
     + [(f"op.{op}.wall_ms", "ms") for ops in WORKLOAD_OPS.values() for op in ops]
 )
@@ -225,6 +225,7 @@ def per_layer(raw, rows_returned, files_written, cores):
     m["jvm.gc_s"] = tr["gc_ms"] / 1000 / n_pass
     m["jvm.heap_peak_mb"] = tr["heap_peak_mb"]
     m["trace.overhead_share"] = tracing_overhead(raw)
+    m["trace.passes"] = n_pass
 
     selfs = self_times(spans)
     for layer in SELF_LAYERS:

@@ -25,7 +25,6 @@ ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
 import inputs  # noqa: E402
-import oracle  # noqa: E402
 import report  # noqa: E402
 
 # seconds a run may take: a run that builds the engine first gets the
@@ -94,6 +93,15 @@ def prune(cache):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def cpu_times():
+    """(steal, total) jiffies over all CPUs, or None off Linux."""
+    try:
+        fields = [int(x) for x in open("/proc/stat").readline().split()[1:9]]
+    except (OSError, ValueError):
+        return None
+    return fields[7], sum(fields)
+
+
 def commit():
     try:
         return subprocess.run(["git", "rev-parse", "HEAD"], cwd=ROOT, capture_output=True, text=True,
@@ -145,6 +153,9 @@ def main():
     t_start = time.time()
     if not os.path.isdir(os.path.join(ROOT, "src", "main", "scala", "graft")):
         die(f"engine sources not found under {ROOT}/src/main/scala")
+    if not os.path.exists(os.path.join(ROOT, "tools", "check.py")):
+        die(f"output comparison rules not found at {ROOT}/tools/check.py")
+    import oracle  # reads the rules from tools/check.py
 
     classpath, built = build()
     cache = os.path.join(ROOT, ".bench_data")
@@ -158,11 +169,13 @@ def main():
     os.makedirs(work)
     try:
         deadline = BUILD_DEADLINE_S if built else DEADLINE_S
+        cpu0 = cpu_times()
         raw = run_jvm(classpath, a, data, work, cores, deadline - CHECK_MARGIN_S - (time.time() - t_start))
+        cpu1 = cpu_times()
         load = a.workload == "etl_load"
         outputs = {op: (os.path.join(work, "load" if load else "check", op), load)
                    for op in report.WORKLOAD_OPS[a.workload]}
-        verdicts = oracle.check(data, raw["oracle_sql"], outputs)
+        verdicts = oracle.check_outputs(data, raw["oracle_sql"], outputs)
         files_written = sum(len(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
                             for d, written in outputs.values() if written)
     finally:
@@ -192,20 +205,27 @@ def main():
     record = {
         "workload": a.workload, "seed": a.seed, "seconds": a.seconds, "trace": a.trace,
         "commit": commit(), "cores": cores, "settings": raw["settings"], "jvm": raw["jvm"],
-        "load_avg_1m": raw["load_avg_1m"], "input": {"dir": os.path.relpath(data, ROOT), "tables": sizes},
+        "load_avg_1m": raw["load_avg_1m"],
+        # CPU time the hypervisor gave other guests while the JVM ran: the
+        # main cause of run-to-run spread on a shared VM
+        "steal_share": (cpu1[0] - cpu0[0]) / max(cpu1[1] - cpu0[1], 1) if cpu0 and cpu1 else None,
+        "input": {"dir": os.path.relpath(data, ROOT), "tables": sizes},
         "timeline_ms": raw["timeline_ms"], "verdicts": {op: v for op, (v, _) in verdicts.items()},
         "wrong": wrong, "errors": [s.get("error") for s in failed],
         "ops_failed_share": n_failed / attempted,
         "end_to_end": e2e, "latency": report.latency_summary(raw),
         "op_median_s": report.op_medians(raw["untraced"]["samples"]),
         "passes_s": raw["untraced"]["passes_s"],
+        "traced_passes_s": raw["traced"]["passes_s"] if raw["traced"] else None,
         "warmup_s": {op: [s["wall_s"] for s in raw["warmup"] if s["op"] == op] for op in report.WORKLOAD_OPS[a.workload]},
         "result": result,
     }
     if a.trace:
         tr = raw["traced"]
         record["trace"] = {
-            "self_time_ms": report.self_times(tr["spans"]), "per_layer": layer,
+            "self_time_ms": report.self_times(tr["spans"]),
+            "per_layer": {name: {"value": layer[name], "unit": unit, "passes": len(tr["passes_s"])}
+                          for name, unit in report.PER_LAYER},
             "overhead": {"share": layer["trace.overhead_share"],
                          "untraced_op_median_s": report.op_medians(raw["untraced"]["samples"]),
                          "traced_op_median_s": report.op_medians(tr["samples"])},
@@ -220,8 +240,9 @@ def main():
     for s in failed:
         print(f"FAILED {s['op']}: {s.get('error')}")
     lat = record["latency"]
+    steal = "n/a" if record["steal_share"] is None else f"{record['steal_share']:.1%}"
     print(f"{a.workload} seed={a.seed} correct={result['correct']} "
-          f"ops_failed_share={record['ops_failed_share']:.4f} ({n_failed}/{attempted}) "
+          f"ops_failed_share={record['ops_failed_share']:.4f} ({n_failed}/{attempted}) host_steal={steal} "
           f"latency samples={lat['samples']} " + " ".join(f"{k}={v:.1f}" for k, v in lat.items() if k != "samples"))
     for name, unit in report.END_TO_END:
         print(f"  {name} = {e2e[name]:.6g} {unit}")
