@@ -1,16 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     // Force FULL materialization through the noop sink: a count() would
     // let the optimizer prune unreferenced Window operators and
     // presentation sorts, silently under-measuring window/sort queries.
@@ -77,7 +70,7 @@ object Bench {
         SparkEntry.queries.get(n).flatMap { fn =>
           val ok =
             try { force(fn(spark, sfDir)); true }
-            catch { case _: Throwable => false } // warmup
+            catch { case NonFatal(_) => false } // warmup
           if (!ok) None
           else {
             val ts = (1 to 3).flatMap { _ =>
@@ -85,7 +78,7 @@ object Bench {
               val t0 = System.nanoTime()
               val passed =
                 try { force(fn(spark, sfDir)); true }
-                catch { case _: Throwable => false }
+                catch { case NonFatal(_) => false }
               if (passed) Some((System.nanoTime() - t0) / 1e9) else None
             }.sorted
             if (ts.isEmpty) None else Some(n -> ts((ts.size - 1) / 2))
@@ -113,7 +106,7 @@ object Bench {
       val w0 = System.nanoTime()
       val warmupOk =
         if (!warmups) false
-        else try { force(fn(spark, sfDir)); true } catch { case _: Throwable => false }
+        else try { force(fn(spark, sfDir)); true } catch { case NonFatal(_) => false }
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       // heavyweight multi-job ops (iterative clustering, the eval
       // reports) don't reach JIT/codegen steady state in one pass —
@@ -126,7 +119,7 @@ object Bench {
       // failing query must not execute (and stack-dump) a third time,
       // and a thrown first pass says nothing about JIT steady state
       if (warmupOk && (System.nanoTime() - w0) / 1e9 > 2.5) {
-        try force(fn(spark, sfDir)) catch { case _: Throwable => () }
+        try force(fn(spark, sfDir)) catch { case NonFatal(_) => () }
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       }
       // settle the heap between queries: lingering shuffle/broadcast
@@ -141,7 +134,7 @@ object Bench {
         val t0 = System.nanoTime()
         val err =
           try { force(fn(spark, sfDir)); null } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[bench] pass FAILED $name")
               e.printStackTrace()
               s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(300)}"
@@ -255,7 +248,7 @@ object Bench {
       val p = java.nio.file.Paths.get("target", "bench_full.json")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, fullLine.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     def familyOf(name: String): String = {
       if (name.matches("q\\d+.*")) "tpch"
       else {

@@ -655,7 +655,7 @@ object SparkEntry {
 
   /** The NSW-lite graph traversal replayed end to end, parameterized
     * exactly like the engine walk (r11 — the (probes, beam, hops, k)
-    * default moved to the AnnSweep-measured point): MULTI-probe IVF
+    * default moved to the measured sweep knee): MULTI-probe IVF
     * seeding when `probes` > 1 (the annIvfProbe CTEs — each query's
     * top-3 over its `probes` nearest cells), then each bounded-beam
     * hop as a CTE pair — `ed{h}` derives the exact top-`k` neighbor
@@ -763,16 +763,12 @@ object SparkEntry {
   /** Prefix every CTE name of the variable-k trainer + two-level
     * assignment chain so it can be spliced next to the walk's own
     * (fixed-k) trainer chain without name collisions. The rename list
-    * is exactly the CTE names those two fragments define; \b keeps
+    * is every `<name> AS MATERIALIZED` the fragment defines; \b keeps
     * t1/t10 and sa1/sa10 distinct, and no column name in the fragments
-    * collides with the list. */
-  private def prefixCtes(sql: String, prefix: String): String = {
-    val names = Seq("ev", "kk", "smp", "sp", "nv", "gg", "sup", "cnear",
-      "cgrp", "pc", "cand", "fine", "asg", "qp") ++
-      (0 to 10).map("t" + _) ++ (0 until 10).map("sa" + _) ++
-      (0 until 10).map("sn" + _)
-    names.foldLeft(sql)((s, n) => s.replaceAll("\\b" + n + "\\b", prefix + n))
-  }
+    * collides with a CTE name. */
+  private def prefixCtes(sql: String, prefix: String): String =
+    """(\w+) AS MATERIALIZED""".r.findAllMatchIn(sql).map(_.group(1))
+      .foldLeft(sql)((s, n) => s.replaceAll("\\b" + n + "\\b", prefix + n))
 
   /** `ann_graph_prebuilt` replayed end to end: the ann-auto k = 12
     * graph build (variable-k trainer + two-level routed assignment +

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** JSON string escaping shared by the two harness mains — backslash,
   * quote, and ALL control chars (<0x20): a tab or CR in builder-authored
@@ -18,20 +19,29 @@ private[graft] object JsonOut {
     case c => c.toString
   } + "\""
 }
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
-object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+/** The one local session every graft main runs on: `local[cores]`,
+  * one shuffle partition per core, UTC session time zone (timestamp
+  * logic is timed and checked in the same zone the oracle uses),
+  * GraftExtensions registered, UI off, WARN logging. */
+private[graft] object LocalSession {
+  def apply(cores: String): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}
+/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare. */
+object Verify {
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outDir) = args
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // optional local-iteration subset (comma-separated names); the
     // driver never sets it, so its full-surface run is unchanged
@@ -42,7 +52,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -10,9 +10,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.functions.GraftExtensions ...
-  * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
+  *
+  * or `withExtensions(new GraftExtensions)` on a session builder
+  * (graft's own mains get it from `graft.LocalSession`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -63,7 +63,12 @@ object PageRank {
     * hops, keeping late frontiers empty. Distances are small exact
     * integers — the bounded recursive-CTE oracle reproduces them
     * bit-for-bit. */
-  def bfsHops(spark: SparkSession, dir: String): DataFrame = {
+  def bfsHops(spark: SparkSession, dir: String): DataFrame =
+    bfsHopsRounds(spark, dir)._1
+
+  /** [[bfsHops]] plus the number of hop rounds the loop executed
+    * (spec hook pinning that the early exit fires). */
+  private[graft] def bfsHopsRounds(spark: SparkSession, dir: String): (DataFrame, Int) = {
     val edges = symmetricEdges(spark, dir)
       .repartition(col("src"))
       .persist()
@@ -97,16 +102,9 @@ object PageRank {
       }
       hop += 1
     }
-    bfsRoundsRan = hop - 1
     edges.unpersist(blocking = false)
-    reached.orderBy("node")
+    (reached.orderBy("node"), hop - 1)
   }
-
-  /** Rounds the last bfsHops / shortestPath call actually executed —
-    * spec hook pinning that the early exit fires (never part of any
-    * query's output). */
-  private[graft] var bfsRoundsRan: Int = 0
-  private[graft] var spRoundsRan: Int = 0
 
   // Measured tuning note (sf0.1, local[32]): disabling AQE for the
   // round loop was tried and is ~25% SLOWER at 32 shuffle partitions —
@@ -244,7 +242,12 @@ object PageRank {
     * (SHUFFLE_HASH — the cached side never re-sorts), relaxation is
     * union + min-aggregate (map-side combinable), and a per-round
     * localCheckpoint stops lineage doubling. No driver action at all. */
-  def shortestPath(spark: SparkSession, dir: String): DataFrame = {
+  def shortestPath(spark: SparkSession, dir: String): DataFrame =
+    shortestPathRounds(spark, dir)._1
+
+  /** [[shortestPath]] plus the number of relaxation rounds the loop
+    * executed (spec hook pinning that the early exit fires). */
+  private[graft] def shortestPathRounds(spark: SparkSession, dir: String): (DataFrame, Int) = {
     val li = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
     val ord = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
     val e0 = li.join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -289,8 +292,7 @@ object PageRank {
       prevFp = fp
       round += 1
     }
-    spRoundsRan = round - 1
     edges.unpersist(blocking = false)
-    dist.orderBy("node")
+    (dist.orderBy("node"), round - 1)
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * 1/buckets slice of the hot key. Correctness is unchanged — each big
   * row still meets each matching small row exactly once.
   *
-  * MEASURED vs AQE (tools/SkewAB, 20M rows / 90% one hot key / 1M-key
+  * MEASURED vs AQE (constructed A/B, 20M rows / 90% one hot key / 1M-key
   * dim, 5 round-robin reps, local[32]): plain 7.46 s, plain+AQE
   * skew-split 6.51 s, salted(8) 3.75 s, salted(8)+AQE 3.71 s — the
   * salt spreads both the probe and the join OUTPUT ahead of the

@@ -66,17 +66,13 @@ object Triangles {
 
   /** Rows per expansion chunk: ~24M (order, part) incidences keep the
     * per-chunk exchange comfortably in memory on a 128 GB box while a
-    * cluster sees only more, smaller tasks. Env-dialable
-    * (GRAFT_LI_CHUNK_ROWS) for the single-box chunk-threshold sweep —
-    * production deployments size it per executor memory. */
-  private val LiChunkRows =
-    sys.env.get("GRAFT_LI_CHUNK_ROWS").map(_.toLong).getOrElse(24000000L)
+    * cluster sees only more, smaller tasks. */
+  private val LiChunkRows = 24000000L
 
-  /** Oriented edges per closing-probe chunk (triangleCount) — same
-    * dial story (GRAFT_TRI_PROBE_ROWS): each probe row carries two
-    * O(√m) neighbor arrays, so this bounds the in-flight join payload. */
-  private val ProbeChunkRows =
-    sys.env.get("GRAFT_TRI_PROBE_ROWS").map(_.toLong).getOrElse(16000000L)
+  /** Oriented edges per closing-probe chunk (triangleCount): each probe
+    * row carries two O(√m) neighbor arrays, so this bounds the
+    * in-flight join payload. */
+  private val ProbeChunkRows = 16000000L
 
   /** Distinct undirected co-purchase edges (a < b). Per-order line
     * counts are bounded (≤ 7 in TPC-H-ish data, small in any order

@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.LongType
   * Each fact row still meets each matching dim row exactly once (the
   * salt only routes WHICH of the B (key, salt) partitions they meet
   * in), so results are unchanged; the hot key's rows spread over B
-  * shuffle partitions instead of one. MEASURED (tools/SkewAB, 20M rows
+  * shuffle partitions instead of one. MEASURED (constructed A/B, 20M rows
   * / 90% one hot key / 1M-key dim, 5 round-robin reps, local[32]):
   * plain 7.46 s, plain+AQE skew-split 6.51 s, salted(8) 3.75 s — the
   * salt spreads the probe AND the join output ahead of downstream

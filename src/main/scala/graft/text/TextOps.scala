@@ -138,21 +138,20 @@ object TextOps {
     * purpose and a FILTERED input like curate's keys separately) and
     * hold the lazily-localCheckpointed pair table plus its checkpoint
     * RDD id. A hit is only served while that RDD is still registered
-    * persistent — Bench/ProdPairAB blanket-unpersist between timed
-    * passes, which invalidates the entry and keeps every benched pass
-    * a full standalone generation (the cache can never make a bench
+    * persistent — Bench blanket-unpersists between timed passes,
+    * which invalidates the entry and keeps every benched pass a full
+    * standalone generation (the cache can never make a bench
     * number lie), and a recompute of an unpersisted local checkpoint
     * would throw rather than silently rebuild. Values are identical
     * with or without the cache (the generation is deterministic), so
     * every consumer hash is unchanged by construction — spec-pinned
-    * in SubstrateCacheSpec, and the in-JVM A/B lives in
-    * tools/SubstrateAB. Bounded at `PairCacheMax` entries, oldest
+    * in SubstrateCacheSpec. Bounded at `PairCacheMax` entries, oldest
     * evicted (and its pin released) first. */
   private val PairCacheMax = 4
   private val pairCache = new java.util.LinkedHashMap[(Int, Int), (DataFrame, Int)]()
   private[graft] val pairCacheHits = new java.util.concurrent.atomic.AtomicLong
 
-  /** test/AB hook: drop every cached pair table (pins released by the
+  /** test hook: drop every cached pair table (pins released by the
     * caller's blanket unpersist or left to GC — entries are lazy
     * checkpoints, so an unmaterialized drop costs nothing). */
   private[graft] def clearPairCache(): Unit = pairCache.synchronized {
@@ -211,7 +210,7 @@ object TextOps {
     //    materialization), both hashed verify sides, and the banded
     //    arm's minhash pass — 4 regex shingling scans collapse to 1.
     //    (This pins the shingle ARRAYS; the earlier "net-negative"
-    //    ProdPairAB reading was about pinning the post-sort HASHED
+    //    in-JVM reading was about pinning the post-sort HASHED
     //    arrays, a different, larger frame.)
     //  - the inverted-index `ex`: feeds the df table + both capped
     //    join sides + the rarity count + the verbatim signature (5
@@ -244,7 +243,7 @@ object TextOps {
     * pair. Reading `ex` (already built, and pinned by the caller)
     * instead of a second `hashedFrom` pass, and exploding each
     * group's clique from ONE collected id list instead of a
-    * self-join, is the ProdPairAB-measured cheapest shape (+15% over
+    * self-join, is the measured cheapest shape (+15% over
     * capped-only; the array-signature self-join form cost +50% —
     * three re-shingling reads). The collect-and-explode arm is GATED
     * at `VerbatimGroupCap` members: the motivating 100 TB case is a
@@ -309,8 +308,8 @@ object TextOps {
     * looser candidate set can only ADD true pairs, never change a
     * value. The residual against the fully uncapped join stays
     * independently measured by `dedup_truth_guard`. The verbatim arm
-    * still reads the caller-pinned `ex` (ProdPairAB: the two-arm form
-    * measured +0.18 s / +7% over capped-only); the banded arm is one
+    * still reads the caller-pinned `ex` (the two-arm form measured
+    * +0.18 s / +7% over capped-only in-JVM); the banded arm is one
     * minhash128 pass over `shingled` plus the bucket shuffle. `thr`
     * loosens the capped generator's verify-bound prune for callers
     * that emit below J = 0.5 (`dedupSweep`). */
@@ -524,7 +523,7 @@ object TextOps {
   /** Capped candidates over a prebuilt index + document-frequency
     * table — `dedupEval` computes both ONCE and probes them at two cap
     * levels. Production pins the variant that won the repeated-measures
-    * A/B (tools/PairJoinAB, SURVEY §6). */
+    * A/B (SURVEY §6). */
   private def cappedCandidatesFromIndex(ex: DataFrame, dfTab: DataFrame,
       dfCap: Long): DataFrame =
     cappedCandidatesVariant(ex, dfTab, dfCap, "foldlen")
@@ -533,9 +532,9 @@ object TextOps {
     * every variant feeds the same exact full-array verify, so emitted
     * pair sets are identical; they differ only in how much work is
     * pruned before the verify join's shuffle. Kept variant-selectable
-    * for tools/PairJoinAB, which measures them back-to-back in one JVM
-    * (single cold passes at 30× swung 3× run-to-run — only alternating
-    * repeated measures can rank them honestly).
+    * so NewOpsSpec pins their equivalence (they were ranked by
+    * alternating repeated measures in one JVM: single cold passes at
+    * 30× swung 3× run-to-run).
     *
     *  - "off": the plain df-capped self-join, distinct pairs.
     *  - "fold": the index join yields each pair once per shared CAPPED
@@ -608,13 +607,13 @@ object TextOps {
   /** Prefix-filter candidates over a prebuilt index + df table —
     * shared with `dedupEval`, which scores this strategy off its
     * persisted substrate. Production pins the variant that won the
-    * repeated-measures A/B (tools/PairJoinAB, SURVEY §6). */
+    * repeated-measures A/B (SURVEY §6). */
   private def prefixCandidatesFromIndex(ex: DataFrame, dfTab: DataFrame): DataFrame =
     prefixCandidatesVariant(ex, dfTab, "len")
 
   /** The prefix candidate join in two provably-equivalent variants
     * (same exact verify downstream — identical emitted sets), kept
-    * variant-selectable for tools/PairJoinAB:
+    * variant-selectable so NewOpsSpec pins their equivalence:
     *  - "off": the plain prefix self-join, distinct pairs.
     *  - "len": PPJoin's length filter J ≤ min(|x|,|y|)/max(|x|,|y|)
     *    inside the index join — size-mismatched pairs can never verify
@@ -741,8 +740,6 @@ object TextOps {
       labels = next.select("doc_id", "label")
       converged = changed == 0
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $rounds changed=$changed")
     }
     edges.unpersist(blocking = false)
     // release the final round's intermediate pinned RDDs (stepped,

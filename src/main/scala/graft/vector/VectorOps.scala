@@ -966,7 +966,7 @@ object VectorOps {
     * Deterministic end to end (rounded-6 scores, id tie-breaks), so
     * unlike classic NSW this walk is hash-oracled: DuckDB replays
     * seeding, every hop, and the pruning exactly. The (probes=3,
-    * beam=24, hops=3, k=12) default is the AnnSweep-measured knee —
+    * beam=24, hops=3, k=12) default is the measured sweep knee —
     * recall@3 0.767 vs ivf_3probe's 0.500 at sf0.1, from 0.40 under
     * the r10 (1, 8, 2, 5) point (SURVEY §6); cost stays
     * Θ(hops·touched·n·d) with touched ≤ queries·beam.
@@ -1004,7 +1004,7 @@ object VectorOps {
     // region often enough that graph_nsw recall@3 was 0.40 vs
     // ivf_3probe's higher row — and the walk's final top-3 keeps any
     // exact-scored seed it can't beat, so the traversal is a
-    // structural ≥ on its own seed generator's recall; the AnnSweep
+    // structural ≥ on its own seed generator's recall; the sweep
     // measurement behind the (probes, beam, hops, k) default is in
     // SURVEY §6).
     // LAZY localCheckpoint on the beam state, seed included (r11): the
@@ -1072,9 +1072,9 @@ object VectorOps {
     * bounded-beam traversal over a PREBUILT production substrate —
     * `vecKnnGraphAnnAuto`'s IVF-derived k = 12 edge table (linear to
     * build; the exact graph is quadratic) — instead of deriving each
-    * hop's neighbor lists on demand. AnnServeAB measured this shape
-    * 17× at sf10 (walk 5.8 s vs 97.3 s on-demand, substrate growth
-    * 1.3× per 10× rows vs 8.6×): at serving scale the graph is built
+    * hop's neighbor lists on demand. Measured 17× faster at sf10
+    * (walk 5.8 s vs 97.3 s on-demand, substrate growth 1.3× per 10×
+    * rows vs 8.6×): at serving scale the graph is built
     * once and amortized across every query batch, and each hop is an
     * edge-table semi-join instead of a Θ(touched·n·d) broadcast scan.
     * This entry stays standalone by contract — every invocation builds

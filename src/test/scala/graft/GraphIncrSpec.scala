@@ -28,7 +28,8 @@ class GraphIncrSpec extends SparkSpec {
   }
 
   test("bfs distances satisfy the shortest-path edge inequality") {
-    val rows = PageRank.bfsHops(spark, sfDir).collect()
+    val (bfs, rounds) = PageRank.bfsHopsRounds(spark, sfDir)
+    val rows = bfs.collect()
     val dist = rows.map(r => r.getAs[Long]("node") -> r.getAs[Long]("dist")).toMap
     val seeds = graft.sources.Tables.customer(spark, sfDir)
       .filter(col("c_nationkey") === 0)
@@ -57,10 +58,10 @@ class GraphIncrSpec extends SparkSpec {
     // empty) instead of running all BfsMaxHops rounds. The distance
     // assertions above pin that stopping early changed nothing.
     val maxD = rows.map(_.getAs[Long]("dist")).max
-    assert(PageRank.bfsRoundsRan == maxD + 1 || PageRank.bfsRoundsRan == PageRank.BfsMaxHops,
-      s"ran ${PageRank.bfsRoundsRan} rounds, max dist $maxD")
+    assert(rounds == maxD + 1 || rounds == PageRank.BfsMaxHops,
+      s"ran $rounds rounds, max dist $maxD")
     assert(maxD < PageRank.BfsMaxHops, "fixture graph should saturate early")
-    assert(PageRank.bfsRoundsRan < PageRank.BfsMaxHops, "early exit never fired")
+    assert(rounds < PageRank.BfsMaxHops, "early exit never fired")
   }
 
   test("weighted shortest path equals sequential Bellman-Ford at 6 rounds") {
@@ -91,11 +92,11 @@ class GraphIncrSpec extends SparkSpec {
       dist = next.toMap
     }
     val exp = dist.toSeq.sortBy(_._1)
-    val got = PageRank.shortestPath(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val (sp, rounds) = PageRank.shortestPathRounds(spark, sfDir)
+    val got = sp.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == exp)
-    assert(PageRank.spRoundsRan == seqConverge,
-      s"engine ran ${PageRank.spRoundsRan} rounds, sequential fixed point at $seqConverge")
+    assert(rounds == seqConverge,
+      s"engine ran $rounds rounds, sequential fixed point at $seqConverge")
     assert(exp.exists(_._2 > 0), "never left the seeds")
     // weighted distances refine hops: any reached node is BFS-reachable
     val hops = PageRank.bfsHops(spark, sfDir).collect()

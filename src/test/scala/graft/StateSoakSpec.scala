@@ -11,9 +11,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * micro-batches and assert, via StreamingQueryProgress's state
   * operator metrics, that state ROWS obey each operator's declared
   * bound — a measurement of the "bounded state forever" claims, not a
-  * narration. (tools/StreamSoak is the wall-clock rate-source twin for
-  * longer runs; this spec is the deterministic MemoryStream version
-  * the test gate can afford.)
+  * narration. (It is the deterministic MemoryStream form of a
+  * wall-clock rate-source soak, sized to what the test gate can
+  * afford.)
   *
   * The bound tests run under BOTH state-store providers — the
   * HDFS-backed in-memory default and RocksDB (r9 verdict item 6: the

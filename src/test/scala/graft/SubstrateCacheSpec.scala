@@ -5,8 +5,8 @@ import org.apache.spark.sql.DataFrame
 
 /** Contract of the session-scoped pair-substrate cache (r10 verdict
   * item 2): consecutive consumers of the SAME doc snapshot reuse one
-  * generation; an invalidated pin (the Bench/ProdPairAB blanket
-  * unpersist) forces a clean regeneration; and the emitted pair set is
+  * generation; an invalidated pin (Bench's blanket unpersist between
+  * passes) forces a clean regeneration; and the emitted pair set is
   * bit-identical in every mode — the cache can change WHEN generation
   * runs, never what it produces. */
 class SubstrateCacheSpec extends SparkSpec {
